@@ -1,10 +1,8 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** The commit paths' manifest counting comes from parquet FOOTERS
   * driver-side (r20): `appendFiles`, `overwriteTable` and
@@ -18,42 +16,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 class CommitFooterCountSpec extends SparkSpec {
 
-  /** (result, jobs started, data records read) while `body` runs. The
-    * write job reads the source once, so records == source rows proves no
-    * read-back; job count pins the commit to the single write job.
-    */
-  private def probe[T](body: => T): (T, Int, Long) = {
-    val jobs = new AtomicInteger()
-    val records = new AtomicLong()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          records.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    val r =
-      try { val v = body; awaitListenerBus(); v }
-      finally spark.sparkContext.removeSparkListener(l)
-    (r, jobs.get(), records.get())
-  }
-
-  /** Drain the async listener bus before reading the counters — a fixed
-    * sleep under-counts on a loaded box (r20 advice). `listenerBus` /
-    * `waitUntilEmpty` are `private[spark]` (public bytecode), so reflection;
-    * the sleep stays only as the fallback if either ever disappears.
-    */
-  private def awaitListenerBus(): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0) match {
-        case Some(m) => m.invoke(bus); ()
-        case None => Thread.sleep(500)
-      }
-    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(500) }
+  private def probe[T](body: => T): (T, Int, Long) = JobProbe(spark)(body)
 
   private def entryChecks(cat: GraftCatalog, table: String,
       expectRows: Long, atLeastFiles: Int): Unit = {

@@ -75,6 +75,36 @@ class RangeDeleteSpec extends SparkSpec {
     assert(ks(cat, "t") == ((1L to 149L) ++ (300L to 400L)).toSet)
   }
 
+  test("mixed drop+boundary range delete reads boundary records once, no job after its write") {
+    val cat = newCatalog()
+    val base = Files.createTempDirectory("graft-rdel-once").toString
+    (1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/b0")
+    cat.createTable("t",
+      CompactionRunner.listParquet(s"$base/b0").map(DataFileTask(_, 1L)))
+    cat.setPartitionSpec("t", Seq(PartitionFieldDef("kt", "truncate[100]", "k")))
+    cat.compactTable(spark, "t",
+      s"${Files.createTempDirectory("graft-rdel-once-out")}",
+      CompactionConfig(targetPartitions = 2))
+    val boundaryRows = cat.loadEntries("t")
+      .filter(e => e.kind == "data" && e.partitionVals("kt") == "100")
+      .map(_.recordCount).sum
+    assert(boundaryRows == 100L)
+
+    // [150, 299]: partition 200 drops, partition 100 is the boundary
+    val (_, stray, records) = JobProbe.afterWrite(spark) {
+      cat.deleteWhereRange(spark, "t", "k", 150, 299,
+        Files.createTempDirectory("graft-rdel-once-d").toString)
+    }
+    // the referenced files are observed on the delete write and the delete
+    // files are counted from their footers: nothing reads the output back
+    assert(stray == 0, s"range delete started $stray jobs after its delete write")
+    assert(records == boundaryRows, s"boundary records must be read once: " +
+      s"$records records for $boundaryRows boundary rows")
+    assert(cat.loadEntries("t").count(_.kind == "posdel") > 0)
+    assert(ks(cat, "t") == ((1L to 149L) ++ (300L to 400L)).toSet)
+  }
+
   test("stats bounds alone cannot drop a file containing NULLs") {
     val cat = newCatalog()
     val base = Files.createTempDirectory("graft-rdel-null").toString

@@ -129,27 +129,40 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("pending eq-deletes survive a key-column rename (ids recorded in the snapshot)") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-evo-eqdel").toString
-    val cat = new GraftCatalog(s"$work/cat")
-    val f1 = writeRows(s"$work/g1", schemaV1,
-      Seq(Seq(1L, 10L, "a"), Seq(2L, 20L, "b"), Seq(3L, 30L, "c")))
-    cat.createTable("t", Seq(CompactionRunner.DataFileTask(f1, 1L)), Some(schemaV1))
-    // upsert keyed on k BEFORE the rename: overwrite k=2
-    val updates = Seq((2L, 200L, "B")).toDF("k", "qty", "tag")
-    cat.upsert(spark, "t", updates, Seq("k"), s"$work/out")
-    // rename k -> key (same field id 1) while the eq-delete is still pending
-    val renamed = StructType(Seq(
-      field("key", LongType, 1),
-      field("qty", LongType, 2),
-      field("tag", StringType, 3)))
-    cat.evolveSchema("t", renamed)
-    // the scan must still apply the delete: k=2's OLD row suppressed
-    val rows = userRows(cat.scanTable(spark, "t"), "key", "qty")
-    assert(rows == Set(List(1L, 10L), List(2L, 200L), List(3L, 30L)),
-      s"eq-delete lost across rename: $rows")
-    // and compaction applies it physically under the renamed schema
-    val (_, manifest) = cat.compactTable(spark, "t", s"$work/compacted")
-    assert(manifest.outputRecordCount == 3L)
+    // every eq-delete writer records its key ids through the same code:
+    // (writer, expected rows after the rename, rows after compaction)
+    val writers: Seq[(String, (GraftCatalog, String) => Unit, Set[List[Any]], Long)] = Seq(
+      // upsert keyed on k BEFORE the rename: overwrite k=2
+      ("upsert", (cat, out) => cat.upsert(spark, "t",
+        Seq((2L, 200L, "B")).toDF("k", "qty", "tag"), Seq("k"), out),
+        Set(List(1L, 10L), List(2L, 200L), List(3L, 30L)), 3L),
+      ("deleteWhereEq", (cat, out) =>
+        cat.deleteWhereEq(spark, "t", Seq(2L).toDF("k"), out),
+        Set(List(1L, 10L), List(3L, 30L)), 2L),
+      ("mergeInto", (cat, out) => cat.mergeInto(spark, "t",
+        Seq((2L, 200L, "B")).toDF("k", "qty", "tag"), Seq("k"),
+        Map("qty" -> col("_src_qty"), "tag" -> col("_src_tag")), out),
+        Set(List(1L, 10L), List(2L, 200L), List(3L, 30L)), 3L))
+    writers.foreach { case (name, write, expected, compacted) =>
+      val work = Files.createTempDirectory(s"graft-evo-eqdel-$name").toString
+      val cat = new GraftCatalog(s"$work/cat")
+      val f1 = writeRows(s"$work/g1", schemaV1,
+        Seq(Seq(1L, 10L, "a"), Seq(2L, 20L, "b"), Seq(3L, 30L, "c")))
+      cat.createTable("t", Seq(CompactionRunner.DataFileTask(f1, 1L)), Some(schemaV1))
+      write(cat, s"$work/out")
+      // rename k -> key (same field id 1) while the eq-delete is still pending
+      val renamed = StructType(Seq(
+        field("key", LongType, 1),
+        field("qty", LongType, 2),
+        field("tag", StringType, 3)))
+      cat.evolveSchema("t", renamed)
+      // the scan must still apply the delete: k=2's OLD row suppressed
+      val rows = userRows(cat.scanTable(spark, "t"), "key", "qty")
+      assert(rows == expected, s"$name: eq-delete lost across rename: $rows")
+      // and compaction applies it physically under the renamed schema
+      val (_, manifest) = cat.compactTable(spark, "t", s"$work/compacted")
+      assert(manifest.outputRecordCount == compacted, name)
+    }
   }
 
   test("evolveSchema rejects resurrecting a dropped field id") {
